@@ -87,96 +87,85 @@ object Corpus {
     * duplicate chains (mirror families, boilerplate drift) are exactly
     * the components a 100 TB corpus has, so diameter-bound rounds are
     * the scale risk; star-contraction collapses them geometrically.
-    * Each phase is one min-aggregate plus one equi-join on the node key;
+    * Each phase is one window min over one exchange on the node key;
     * per-round localCheckpoint keeps the plan bounded (DESIGN.md §2).
     *
-    * Convergence = edge-set fixpoint: a (count, Σsrc, Σdst) checksum
-    * gates the rounds, and the round it stabilizes an EXACT set-equality
-    * check (equal counts + one-sided exceptAll empty) confirms — so
-    * convergence is never declared on a checksum collision, matching the
-    * throw-on-no-convergence contract below. */
-  def clusterLabels(docs: DataFrame, maxRounds: Int = 32): DataFrame = {
+    * Convergence = the edge set is a star forest, tested per node with
+    * one hash aggregate over the symmetric edges: every node is a root
+    * (all neighbors larger) or a leaf (exactly one neighbor, smaller).
+    * Exact: a leaf's one neighbor is smaller, so it is no leaf, hence a
+    * root; every edge thus joins a leaf to a root, and each component is
+    * one star whose root is its min — a fixpoint of both phases and the
+    * shape the final labeling reads. */
+  def clusterLabels(docs: DataFrame): DataFrame = {
     val pairs = TextOps.minhashPairs(docs)
-    componentLabels(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")),
-        maxRounds)
+    componentLabels(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .select(col("node").as("doc_id"), col("cluster"))
   }
+
+  /** Round bound of the star contraction, which needs O(log n) rounds. */
+  private val MaxRounds = 32
 
   /** Generic star-contraction connected components over an arbitrary
     * undirected edge list (columns `src`, `dst`, any orientation, self
     * loops ignored): (node, cluster) for every node that appears in at
     * least one edge; cluster = min node id of the component. The
-    * algorithm, convergence gate, and round bound are [[clusterLabels]]'s
+    * algorithm, convergence rule, and round bound are [[clusterLabels]]'s
     * (which delegates here); DBSCAN's core-graph clustering reuses this
     * directly. */
-  def componentLabels(edges: DataFrame, maxRounds: Int = 32): DataFrame = {
-    // star edges oriented larger → smaller (src > dst always)
-    // r15 (guide §1.2: fewer driver-blocking actions in iterative ops):
-    // LAZY checkpoints throughout — the per-round `chk` action is the
-    // first consumer and materializes the round's frame as a side effect,
-    // so an eager localCheckpoint here was one extra full job per round
-    // (rounds × ~0.4 s of pure stage latency at sf0.1 across cc_sizes /
-    // DBSCAN / dedup-cluster carriers). Lineage still truncates at the
-    // checkpoint; results are byte-identical.
+  def componentLabels(edges: DataFrame): DataFrame = {
+    // every leaf is one src pointing at its root; roots label themselves
+    val e = starForest(edges)._1
+    e.select(col("src").as("node"), col("dst").as("cluster"))
+      .union(e.select(col("dst")).distinct()
+        .select(col("dst").as("node"), col("dst").as("cluster")))
+  }
+
+  /** The converged star forest of `edges` (leaf `src` → root `dst`, root =
+    * component min) and the number of rounds it took. */
+  private[graft] def starForest(edges: DataFrame): (DataFrame, Int) = {
+    // star edges as a set, oriented larger → smaller (src > dst always).
+    // Checkpoints are lazy, but under AQE the call still runs every
+    // shuffle-map stage of the round; only the result stage waits for the
+    // star test's job.
     var e = edges
       .select(greatest(col("src"), col("dst")).as("src"),
         least(col("src"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct().materialized(eager = false)
-    def chk(df: DataFrame): (Long, Long, Long) = {
-      val r = df.agg(count(lit(1)), sum("src"), sum("dst")).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    var prev = chk(e)
-    var converged = prev._1 == 0L
+    def sym(df: DataFrame) = df.union(df.select(col("dst").as("src"), col("src").as("dst")))
+    // a node with a smaller neighbor and more than one neighbor is neither
+    // a root nor a leaf
+    def isStarForest(df: DataFrame) = sym(df).groupBy("src")
+      .agg(min("dst").as("mn"), count(lit(1)).as("n"))
+      .filter(col("mn") < col("src") && col("n") > 1)
+      .isEmpty
+    val byNode = Window.partitionBy("src")
     var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // large-star: every node u re-links its LARGER neighbors to
-      // m = min(N(u) ∪ {u}); needs the symmetric adjacency for the min.
-      // Output stays larger → smaller (dst > u ≥ m).
-      val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      val mLarge = sym.groupBy("src").agg(min("dst").as("mn"))
-        .select(col("src"), least(col("src"), col("mn")).as("m"))
-      // r15 (§2.4, fewer exchanges per round — rounds × carriers pay it):
-      //   - the probe side is written as reversed(e) directly: e is
-      //     invariantly oriented src > dst, so sym.filter(dst > src)
-      //     keeps exactly the reversed branch of the union — same rows,
-      //     half the scan and no filter over the 2× union;
-      //   - the mid-phase distinct() is DROPPED: min() is multiplicity-
-      //     blind, the end-of-round distinct restores set semantics, and
-      //     the convergence checksum reads the post-distinct frame — the
-      //     edge SET per round (and so the round count, the fixpoint and
-      //     the labels) is bit-identical, one full shuffle cheaper.
-      val large = e.select(col("dst").as("src"), col("src").as("dst"))
-        .join(mLarge, "src")
+    while (!isStarForest(e)) {
+      if (rounds == MaxRounds)
+        throw new IllegalStateException(
+          s"componentLabels did not converge in $MaxRounds rounds — the star " +
+            "contraction should need O(log n); raise MaxRounds (labels would " +
+            "be wrong)")
+      // large-star: every node u re-links its LARGER neighbors v to
+      // m = min(N(u) ∪ {u}); output stays larger → smaller (v > u ≥ m).
+      val large = sym(e)
+        .withColumn("m", least(col("src"), min("dst").over(byNode)))
+        .filter(col("dst") > col("src"))
         .select(col("dst").as("src"), col("m").as("dst"))
-      // small-star: every node u re-links its (all smaller) neighbors and
+      // small-star: every node u re-links its (all smaller) neighbors v and
       // itself to m = min(N(u)); orientation again preserved (v ≥ m).
-      val mSmall = large.groupBy("src").agg(min("dst").as("m"))
-      val next = large.join(mSmall, "src")
-        .filter(col("dst") =!= col("m"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .union(mSmall.select(col("src"), col("m").as("dst")))
+      e = large.withColumn("m", min("dst").over(byNode))
+        .select(inline(array(
+          struct(col("dst").as("src"), col("m").as("dst")),
+          struct(col("src"), col("m").as("dst")))))
+        .filter(col("src") =!= col("dst"))
         .distinct()
         .materialized(eager = false)
-      val cur = chk(next)
-      converged = cur == prev && next.exceptAll(e).isEmpty
-      e = next
-      prev = cur
       rounds += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"componentLabels did not converge in $maxRounds rounds — the star " +
-          "contraction should need O(log n); raise maxRounds (labels would " +
-          "be wrong)")
-    // fixpoint is a star forest: every non-root node appears exactly once
-    // as src pointing at its component min; roots label themselves
-    e.select(col("src").as("node"), col("dst").as("cluster"))
-      .union(e.select(col("dst")).distinct()
-        .select(col("dst").as("node"), col("dst").as("cluster")))
+    (e, rounds)
   }
 
   /** Near-duplicate keeper filter: keep every unclustered document plus

@@ -300,9 +300,9 @@ object CorpusQueries {
         .select("doc_id", "lang", "ws_tokens", "score", "cum_tokens")
   }
 
-  /** Implementation lives in ops.Corpus.clusterLabels: localCheckpoint
-    * (eager) rather than persist — it TRUNCATES lineage at the
-    * materialized edge list. With plain persist, round k's plan still
+  /** Implementation lives in ops.Corpus.clusterLabels: a lazy
+    * localCheckpoint per round rather than persist — it TRUNCATES lineage
+    * at the materialized edge list. With plain persist, round k's plan still
     * embeds the whole shingle→minhash→band DAG plus 2k join/agg layers —
     * task binaries and optimizer time grow every round (measured 17 s for
     * a ≤5-round graph at sf0.1; ~1 s with checkpointed bounded plans). At

@@ -2677,12 +2677,15 @@ object VectorQueries {
     * covered, the q_graph_hubness zero-bucket contract — never a row
     * drop).
     *
-    * Scale: Spark side runs ops.Corpus.componentLabels — star-contraction
-    * min-label propagation, O(diameter) rounds of keyed joins, checksum
-    * convergence, no driver per-row traffic (the q_dedup_cluster
-    * machinery applied to a second edge domain — graph-parametric like
-    * mutualSql). The oracle replays closure as a recursive CTE over the
-    * same inlined mutual edges. */
+    * Scale: Spark side runs ops.Corpus.componentLabels — large-star /
+    * small-star contraction, O(log n) rounds of one window exchange per
+    * phase, stopping once the edges form a star forest; no per-row
+    * traffic to the Spark driver (the q_dedup_cluster machinery applied
+    * to a second edge domain — graph-parametric like mutualSql). The
+    * labels are checkpointed for their two readers: without it the query
+    * ran as many jobs but spent ~0.04 s more executing (sf0.01, 4 cores).
+    * The oracle replays closure as a recursive CTE over the same inlined
+    * mutual edges. */
   val graphCcSizes = Q("q_graph_cc_sizes",
     "component-size histogram of the mutual-kNN graph")(
     "WITH RECURSIVE medges AS (" + mutualSql(annKnnJoin) + "), " +

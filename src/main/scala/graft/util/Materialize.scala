@@ -40,9 +40,12 @@ object Materialize {
   val DirKey = "spark.graft.checkpointDir"
 
   /** Materialize `df` per the session's configured strategy. `eager`
-    * keeps the localCheckpoint meaning: lazy materialization happens
-    * inside the consumer's first action instead of a blocking job here
-    * (persist is inherently lazy; reliable checkpoint honors the flag). */
+    * keeps the localCheckpoint meaning: eager runs the whole plan here;
+    * lazy defers only its result stage — under AQE the call still runs
+    * every shuffle-map stage of `df` as a job (one per exchange of a
+    * componentLabels round), and the blocks are written by the
+    * consumer's first action (persist is inherently lazy; reliable
+    * checkpoint honors the flag). */
   def apply(df: DataFrame, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.get(Key, "localCheckpoint") match {

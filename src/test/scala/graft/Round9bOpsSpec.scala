@@ -10,7 +10,7 @@ import graft.queries.{AggQueries, CorpusStatsQueries, PipelineQueries, VectorQue
   * and cluster identity on a crafted geometry, exact tie-aware AUC vs a
   * brute-force pair count, count-min sketch invariants, winsorization
   * against Scala order statistics, and the generic component-labeling
-  * helper against a known graph.
+  * helper against a known graph and an in-memory union-find.
   */
 class Round9bOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -306,5 +306,87 @@ class Round9bOpsSpec extends SparkSpec {
     // self-loop node 7 carries no real edge => absent from the labeling
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L))
+  }
+
+  // ---- componentLabels: star-forest convergence vs in-memory union-find 
+
+  /** Reference labels: union-find that always hangs the larger root under
+    * the smaller, so every root is its component's min. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(n => n -> find(n)).toMap
+  }
+
+  /** (labels, rounds); asserts one row per labeled node. The labels are
+    * read from the converged forest, which componentLabels accepts as a
+    * star forest in zero rounds. */
+  private def ccRun(edges: org.apache.spark.sql.DataFrame): (Map[Long, Long], Int) = {
+    val (forest, rounds) = graft.ops.Corpus.starForest(edges)
+    val rows = graft.ops.Corpus.componentLabels(forest).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val got = rows.toMap
+    assert(rows.length === got.size, "duplicate node rows")
+    (got, rounds)
+  }
+
+  private def cc(edges: Seq[(Long, Long)]): (Map[Long, Long], Int) =
+    ccRun(edges.toDF("src", "dst"))
+
+  test("componentLabels matches union-find on 20 seeded random graphs") {
+    (1 to 20).foreach { seed =>
+      val rng = new scala.util.Random(seed)
+      val n = 2 + rng.nextInt(300)
+      // sparse, partly negative id space; odd seeds are random trees (long
+      // paths), even seeds random multigraphs with self loops
+      val ids = rng.shuffle((-5L * n until 5L * n).toVector).take(n)
+      val edges =
+        if (seed % 2 == 1) (1 until n).map(i => (ids(i), ids(rng.nextInt(i))))
+        else Seq.fill(rng.nextInt(2 * n + 1))((ids(rng.nextInt(n)), ids(rng.nextInt(n))))
+      val (got, rounds) = cc(edges)
+      assert(got === unionFind(edges), s"seed $seed")
+      assert(rounds <= 20, s"seed $seed took $rounds rounds")
+    }
+  }
+
+  test("componentLabels: reverse-numbered long path converges in O(log n) rounds") {
+    val n = 2000L
+    val (got, rounds) = cc((1L until n).map(i => (i + 1, i)))
+    assert(got === (1L to n).map(_ -> 1L).toMap)
+    assert(rounds <= 2 * 11, s"$rounds rounds")
+  }
+
+  test("componentLabels: a star forest takes zero rounds") {
+    val edges = Seq((5L, 1L), (1L, 9L), (7L, 1L), (20L, 11L), (11L, 30L))
+    assert(cc(edges) === (unionFind(edges), 0))
+  }
+
+  test("componentLabels: empty and self-loop-only edge sets label nothing") {
+    assert(cc(Seq.empty) === (Map.empty, 0))
+    assert(cc(Seq((5L, 5L), (6L, 6L), (5L, 5L))) === (Map.empty, 0))
+  }
+
+  test("componentLabels: duplicate edges in both orientations") {
+    val edges = Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 2L), (2L, 3L), (3L, 2L),
+      (9L, 8L), (8L, 9L), (8L, 9L))
+    assert(cc(edges)._1 === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 8L, 9L -> 8L))
+  }
+
+  test("componentLabels: one hot component of 50k leaves on one root") {
+    // the hub is the LARGEST id, so the input is no star forest: both
+    // window phases see the 50k-row hub partition
+    val leaves = 50000L
+    val (got, rounds) = ccRun(spark.range(leaves)
+      .select(lit(leaves).as("src"), col("id").as("dst")))
+    assert(rounds === 1)
+    assert(got.size === leaves + 1)
+    assert(got.values.forall(_ == 0L))
   }
 }
